@@ -2998,7 +2998,8 @@ object PipelineQueries {
         |  SELECT tf.doc_id, tf.word, tf.tf, df.df,
         |   tf.tf * ln(n.n_docs::DOUBLE / df.df) AS tfidf,
         |   row_number() OVER (PARTITION BY tf.doc_id
-        |     ORDER BY tf.tf * ln(n.n_docs::DOUBLE / df.df) DESC, tf.word ASC) AS rk
+        |     ORDER BY round(tf.tf * ln(n.n_docs::DOUBLE / df.df), 6) DESC,
+        |       tf.word ASC) AS rk
         |  FROM tf JOIN df USING (word) CROSS JOIN n) AS t
         | WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin.replace("\n", " "),
     "text_perplexity" ->

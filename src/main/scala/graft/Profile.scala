@@ -51,37 +51,6 @@ object Profile {
       val df = pipeline.TextAnalysis.bigramCrossEntropy(docs)
       df.write.format("noop").mode("overwrite").save(); df.count()
     }
-    // range-door A/B: the direct per-sample expansion vs the
-    // two-phase cell composition — the testdata (sparse per cell:
-    // cells ≈ samples, the paths should tie) and a DENSE synthetic
-    // (100 series at 5 s cadence for a day = 6 samples per 30 s cell;
-    // [1h] windows at 30 s step = 120 cells/window — the cell path
-    // should win by ≈ the per-cell density)
-    if (sys.env.contains("SPARK_GRAFT_RANGE_AB")) {
-      val sparse = tsdb.Vectors.samples(Tables.events(spark, sfDir))
-        .where(col("name") === "purchase")
-      val dense = spark.range(0, 1728000L).select(
-        lit("m").as("name"), (col("id") % 100).as("user_id"),
-        timestamp_seconds(lit(1704240000L) + (col("id") / 100) * 5).as("ts"),
-        (col("id") % 97).cast("double").as("value"), col("id").as("event_id"))
-        .localCheckpoint(true)
-      val rc = promql.PromQL.RangeCtx(1704240000L, 1704326400L, 30L, 300L)
-      for ((tag, in, rangeS) <- Seq(("sparse_1d", sparse, 86400L),
-                                    ("dense_1h", dense, 3600L));
-           fn <- Seq("rate", "sum_over_time");
-           mode <- Seq("direct", "cells")) {
-        val t0 = System.nanoTime()
-        val df =
-          if (mode == "direct")
-            promql.PromQL.gridWindowDirect(fn, in, rangeS, rc, Nil)
-          else promql.PromQL.gridWindowCells(fn, in, rangeS, rc)
-        df.write.format("noop").mode("overwrite").save()
-        println(f"PROFILE range_${tag}_$fn%-14s $mode%-7s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-        if (sys.env.contains("SPARK_GRAFT_RANGE_AB_PLAN") &&
-            fn == "sum_over_time" && tag == "sparse_1d")
-          println(df.queryExecution.executedPlan.toString)
-      }
-    }
     println(pipeline.TextAnalysis.bigramCrossEntropy(docs)
       .queryExecution.executedPlan.toString.linesIterator
       .filter(l => l.contains("Exchange") || l.contains("Reused") ||

@@ -1043,21 +1043,16 @@ object TsdbQueries {
         1704240000L, 1706313600L, 10800L)
         .select(col("user_id"), col("bucket_s"), round(col("value"), 9).as("value"))
         .orderBy("user_id", "bucket_s")),
-    // DENSE range requests (r12): a 24-windows-per-day [1d]@1h sum
-    // through the direct narrow-row expansion (the measured-fastest
-    // form for plain aggregates — see PromQL.cellFns)
+    // DENSE range requests: 24 overlapping [1d] windows per day
+    // at a 1h step, each series swept once across the grid
     "pql_range_dense" -> ((s, dir) =>
       graft.promql.PromQL.rangeQuery(samples(s, dir),
         """sum_over_time({name="purchase"}[1d])""",
         1704240000L, 1706313600L, 3600L)
         .orderBy("name", "user_id", "bucket_s")),
-    // …and the rate family through the two-phase CELL path —
-    // per-(series, step-cell) partials composed per window instead of
-    // per-sample × R/step expansion of the lag-widened rows (the
-    // 100 TB dense-dashboard path, measured ~2.4× on the A/B probe);
-    // the counter correction composes from in-cell pre-sums +
-    // membership-checked boundary pairs. The oracle replays the
-    // per-sample form, so the gate proves the decomposition exact.
+    // …and the rate family over the same dense grid: extrapolation
+    // and the counter correction per window, inside the sweep. The
+    // oracle replays the per-window definition with a grid join.
     "pql_range_rate_dense" -> ((s, dir) =>
       graft.promql.PromQL.rangeQuery(samples(s, dir),
         """rate({name="purchase"}[1d])""",
@@ -3204,7 +3199,7 @@ object TsdbQueries {
               1704240000L, 1706313600L, 10800L, 86400L)} AS r
          |  ON l.user_id = r.user_id AND l.bucket_s = r.bucket_s
          | ORDER BY l.user_id, l.bucket_s""".stripMargin.replace("\n", " "),
-    // the per-sample replay of the cell-composed dense request
+    // the per-window replay of the dense request
     "pql_range_dense" ->
       s"""WITH grid AS (SELECT unnest(generate_series(
          |   1704240000, 1706313600, 3600)) AS bucket_s)

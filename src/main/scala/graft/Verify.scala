@@ -13,6 +13,18 @@ object Verify {
     val spark = Sessions.builder(cpus).getOrCreate()
     Sessions.tune(spark)
     new java.io.File(outDir).mkdirs()
+    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    // — a tab or CR in an oracle's SQL would otherwise make the
+    // checker's json.load fail and silently zero the correctness record.
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
     // Overlap independent queries from a small thread pool (guide
     // §2.6): each sf0.01 dump is latency-bound (planning + job
     // dispatch + a 1-file write), so a strictly sequential loop left
@@ -26,6 +38,14 @@ object Verify {
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "8").toInt)
     val work = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    // the names asked for, so the checker can fail every one that
+    // wrote no dump (a query that throws leaves none — and no stale
+    // dump of an earlier run either)
+    val requested = only.map(_.toSeq.sorted).getOrElse(work.map(_._1))
+    requested.foreach(name =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name")))
+    Files.writeString(Paths.get(s"$outDir/requested.json"),
+      requested.map(q).mkString("[", ",", "]"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     val tasks = work.map { case (name, fn) =>
       pool.submit(new Runnable {
@@ -41,18 +61,6 @@ object Verify {
     }
     tasks.foreach(_.get())
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

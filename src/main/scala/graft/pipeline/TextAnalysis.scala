@@ -293,12 +293,16 @@ object TextAnalysis {
       .withColumn("tfidf",
         col("tf").cast("double") *
           log(col("n_docs").cast("double") / col("df").cast("double")))
+    // rank on the rounded score: exact ties (tf 1 at df n/9 against
+    // tf 2 at df n/3) differ in the last ulp of ln between engines,
+    // so the unrounded score would order tied words arbitrarily
     val rankW = Window.partitionBy("doc_id")
-      .orderBy(col("tfidf").desc, col("word").asc)
-    scored.withColumn("rk", row_number().over(rankW).cast("long"))
+      .orderBy(col("tfidf_v").desc, col("word").asc)
+    scored.withColumn("tfidf_v", round(col("tfidf"), 6))
+      .withColumn("rk", row_number().over(rankW).cast("long"))
       .where(col("rk") <= topK)
       .select(col("doc_id"), col("word"), col("tf"), col("df"),
-        round(col("tfidf"), 6).as("tfidf_v"), col("rk"))
+        col("tfidf_v"), col("rk"))
   }
 
   /** Unigram-LM cross-entropy per document — the perplexity quality

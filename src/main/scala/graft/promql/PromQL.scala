@@ -1,6 +1,6 @@
 package graft.promql
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tsdb.{Fetch, Temporal, Vectors}
@@ -243,7 +243,7 @@ object PromQL {
       // any lookback/step ratio is legal (upstream SubqueryExpr):
       // lookback < step (x[5m:1h]) means most windows hold at most
       // the current step — batch mode's trailing RANGE frame and the
-      // range door's gridExpand both degrade to that naturally
+      // range door's sweep both degrade to that naturally
       def checkInner(ifn: String, s: Selector): Unit = {
         if (!temporalFns(ifn) || !slidingFns(ifn))
           throw new ParseException(
@@ -651,12 +651,14 @@ object PromQL {
     * grid's instant vector. A top-level range selector is rejected,
     * as upstream ("expression type range vector").
     *
-    * Scale: each sample expands to at most ⌈R/step⌉ (window, sample)
-    * rows computed from integer µs arithmetic (no instant×sample
-    * cross join), and every window reduces in ONE map-side-combining
-    * aggregation keyed (series, T) — the same posture as the
-    * epoch-aligned sliding operators, generalized to an arbitrary
-    * grid origin. */
+    * Scale: every windowed leaf sweeps each series once across the
+    * grid ([[gridWindowEval]]): work is O(samples + emitted instants),
+    * plus the window sizes for summed terms, which use plain
+    * per-window loops (sliding float add/subtract drifts past the
+    * oracle's 9-decimal rounding). Memory holds one series' samples
+    * within the query range, and over a store bucketed on the series
+    * labels (SeriesStore) the leaves plan no exchange; the first
+    * exchange is the enclosing aggregation's. */
   def rangeQuery(samples: DataFrame, q: String, startS: Long, endS: Long,
                  stepS: Long, lookbackS: Long = 300L): DataFrame = {
     require(stepS > 0, s"step must be positive, got $stepS")
@@ -676,30 +678,6 @@ object PromQL {
   private def rangeGrid(rc: RangeCtx, samples: DataFrame): DataFrame =
     samples.sparkSession.range(0L, rc.nMax + 1)
       .select((lit(rc.startS) + col("id") * rc.stepS).as("bucket_s"))
-
-  /** Exact integer ceil-division of a µs column by a positive step
-    * (floor/ceil via pmod, no doubles at the boundaries). */
-  private def ceilDivUs(a: Column, stepUs: Long): Column = {
-    val neg = -a
-    -((neg - pmod(neg, lit(stepUs))) / lit(stepUs)).cast("long")
-  }
-
-  /** Expand each sample to the grid instants whose (T−R, T] window
-    * contains it: T ∈ [ts, ts+R) ⇒ k ∈ [⌈(ts−start)/step⌉,
-    * ⌈(ts+R−start)/step⌉−1], clipped to the grid — exact integer µs
-    * arithmetic, ≤ ⌈R/step⌉ rows per sample. */
-  private def gridExpand(in: DataFrame, rangeS: Long,
-                         rc: RangeCtx): DataFrame = {
-    val stepUs = rc.stepS * 1000000L
-    val rel = unix_micros(col("ts")) - lit(rc.startS * 1000000L)
-    val kLo = greatest(lit(0L), ceilDivUs(rel, stepUs))
-    val kHi = least(lit(rc.nMax),
-      ceilDivUs(rel + lit(rangeS * 1000000L), stepUs) - 1)
-    in.where(kLo <= kHi)
-      .select(col("*"), explode(sequence(kLo, kHi)).as("_k"))
-      .withColumn("bucket_s", lit(rc.startS) + col("_k") * rc.stepS)
-      .drop("_k")
-  }
 
   /** Range-mode `@` handling around a leaf evaluation: without the
     * modifier, evaluate over the full grid; with it, evaluate on the
@@ -723,331 +701,217 @@ object PromQL {
     }
   }
 
-  /** The functions routed to the two-phase cell evaluation when the
-    * range divides by the step: the extrapolated-rate family only.
-    * The A/B probe (Profile, SPARK_GRAFT_RANGE_AB) measured the
-    * decision: rate's expansion rows carry the lag-derived state
-    * (prev value/µs, reset term) and the packed first/last keys, so
-    * composing per-cell partials instead wins ~2.4× at rate(x[1d])
-    * @ 30 s; the plain *_over_time aggregates expand a NARROW row
-    * (one value) that whole-stage codegen chews at ~90 M rows/s —
-    * for them the cell path's two extra exchanges cost more than the
-    * expansion saves until per-cell density gets extreme, so they
-    * stay on the direct form. [[gridWindowCells]] still implements
-    * every decomposable aggregate (parity-spec'd) for that regime. */
-  private val cellFns = Set("rate", "increase", "delta")
+  /** One function's value over one window: the series' samples
+    * `[a, b)` (b > a) of the (µs, value) arrays sorted by
+    * (ts, event_id), at instant `tS` (epoch seconds); None when
+    * PromQL emits nothing there. */
+  private type WindowFn = (Array[Long], Array[Double], Int, Int, Long) => Option[Double]
 
-  /** One temporal function over the grid windows — the range-mode
-    * leaf. Dispatches to the two-phase cell evaluation when the range
-    * is a whole multiple of the step at a dense-enough factor (the
-    * 100 TB path — see [[gridWindowCells]]); otherwise the direct
-    * per-sample expansion. Output (labels…, bucket_s, value);
-    * instants whose window holds no samples are absent (PromQL's
-    * empty vector). */
-  private def gridWindowEval(fn: String, in: DataFrame, rangeS: Long,
-                             rc: RangeCtx, ps: Seq[Double]): DataFrame =
-    if (cellFns(fn) && rangeS % rc.stepS == 0 && rangeS / rc.stepS >= 8)
-      gridWindowCells(fn, in, rangeS, rc)
-    else gridWindowDirect(fn, in, rangeS, rc, ps)
+  private def secondOf(us: Long): Long = Math.floorDiv(us, 1000000L)
 
-  /** Direct per-sample grid-window evaluation: each sample expands to
-    * ≤ ⌈R/step⌉ instant rows (map-local, partial-aggregated). CPU is
-    * samples × R/step — fine at modest factors and the only exact
-    * form when R doesn't divide by step or the aggregate isn't
-    * decomposable (quantile). */
-  private[graft] def gridWindowDirect(fn: String, in: DataFrame, rangeS: Long,
-                                      rc: RangeCtx, ps: Seq[Double]): DataFrame = {
-    val keys = (Vectors.labels :+ "bucket_s").map(col)
-    // packed in-window ordering key (Vectors.lastKey convention):
-    // keeps the aggregate hash-aggregable where a struct key would
-    // demote it to SortAggregate. The packed form is exact only while
-    // the in-window µs offset (< rangeS·10⁶) times 2²⁶ stays under
-    // 2⁶³ — i.e. rangeS < 2³⁷ µs ≈ 38 h. Wider windows (rate(x[2d]),
-    // x[7d]…) would silently mis-order min_by/max_by on the packed
-    // key, so they fall back to a struct ordering key: still correct,
-    // at SortAggregate cost, on the rare wide-window query.
-    def ordKey: Column =
-      if (rangeS * 1000000L < (1L << 37))
-        (unix_micros(col("ts")) -
-          (col("bucket_s") - rangeS) * 1000000L) * lit(1L << 26) +
-          pmod(col("event_id"), lit(1L << 26))
-      else struct(unix_micros(col("ts")), col("event_id"))
+  /** The definitions the sweep applies per window — the same
+    * conventions as the batch Temporal operators, with the window
+    * (T−R, T] in place of the tumbling bucket. */
+  private def windowFn(fn: String, rangeS: Long, ps: Seq[Double]): WindowFn = {
+    def total(v: Array[Double], a: Int, b: Int): Double = {
+      var s = 0.0; var i = a
+      while (i < b) { s += v(i); i += 1 }
+      s
+    }
+    def mean(v: Array[Double], a: Int, b: Int): Double = total(v, a, b) / (b - a)
+    // population variance, two-pass around the mean
+    def varPop(v: Array[Double], a: Int, b: Int): Double = {
+      val m = mean(v, a, b)
+      var s = 0.0; var i = a
+      while (i < b) { s += (v(i) - m) * (v(i) - m); i += 1 }
+      s / (b - a)
+    }
     fn match {
-      case "rate" | "increase" | "delta" =>
-        val wSeries = Window.partitionBy(Vectors.labels.map(col): _*)
-          .orderBy(col("ts"), col("event_id"))
-        val withPrev = in
-          .withColumn("prev_v", lag("value", 1).over(wSeries))
-          .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(wSeries))
-        val agg = gridExpand(withPrev, rangeS, rc)
-          .withColumn("corr_term",
-            // rate.go:183 — a reset whose predecessor is inside the
-            // window contributes the whole previous value
-            when(col("prev_us") > (col("bucket_s") - rangeS) * 1000000L &&
-              col("prev_v") > col("value"), col("prev_v")).otherwise(lit(0.0)))
-          .groupBy(keys: _*)
-          .agg(
-            min_by(col("value"), ordKey).as("first_v"),
-            max_by(col("value"), ordKey).as("last_v"),
-            min(unix_micros(col("ts"))).as("first_us"),
-            max(unix_micros(col("ts"))).as("last_us"),
-            count(lit(1)).as("n_samples"),
-            sum(col("corr_term")).as("corr"))
-        val (d, i, r) = Temporal.extrapolatedRate(
-          col("bucket_s") - rangeS, col("bucket_s"), rangeS)
-        val v = fn match {
-          case "rate"     => round(r, 9)
-          case "increase" => round(i, 6)
-          case "delta"    => round(d, 6)
+      case "rate" | "increase" | "delta" => (us, v, a, b, tS) => {
+        // rate.go:183 — a reset whose predecessor is inside the
+        // window contributes the whole previous value
+        var corr = 0.0; var i = a + 1
+        while (i < b) { if (v(i - 1) > v(i)) corr += v(i - 1); i += 1 }
+        Temporal.extrapolatedRate(v(a), v(b - 1), us(a), us(b - 1), b - a,
+          corr, tS - rangeS, tS, rangeS).map { case (d, inc, r) =>
+          if (fn == "rate") r else if (fn == "increase") inc else d
         }
-        agg.select(keys :+ v.as("value"): _*).where(col("value").isNotNull)
-
+      }
       // irate/idelta (temporal/rate.go:36,40): the window's final two
-      // samples. The last sample's GLOBAL predecessor is the window's
-      // second-to-last iff it lies inside the window — in-window
-      // adjacency equals global adjacency on a contiguous time range
-      // (the rateSliding argument). dt is second-truncated like the
-      // batch irateFrame, so the two modes agree on aligned windows.
-      case "irate" | "idelta" =>
-        val wSeries = Window.partitionBy(Vectors.labels.map(col): _*)
-          .orderBy(col("ts"), col("event_id"))
-        val withPrev = in
-          .withColumn("prev_v", lag("value", 1).over(wSeries))
-          .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(wSeries))
-          .withColumn("prev_s", lag(unix_timestamp(col("ts")), 1).over(wSeries))
-        val agg = gridExpand(withPrev, rangeS, rc)
-          .groupBy(keys: _*)
-          .agg(max_by(struct(col("value"), col("prev_v"), col("prev_us"),
-            col("prev_s"), unix_timestamp(col("ts")).as("ts_s")), ordKey)
-            .as("last"))
-        val prevIn = col("last.prev_us") >
-          (col("bucket_s") - rangeS) * 1000000L
-        val dv = col("last.value") - col("last.prev_v")
-        val v = fn match {
-          case "idelta" => round(dv, 6)
-          case "irate" =>
-            round(dv / (col("last.ts_s") - col("last.prev_s")).cast("double"), 9)
+      // samples; dt is second-truncated like the batch irateFrame, and
+      // a zero interval emits nothing (upstream's sampledInterval == 0)
+      case "irate" | "idelta" => (us, v, a, b, _) =>
+        if (b - a < 2) None
+        else {
+          val dv = v(b - 1) - v(b - 2)
+          val dt = secondOf(us(b - 1)) - secondOf(us(b - 2))
+          if (fn == "idelta") Some(dv)
+          else if (dt == 0) None
+          else Some(dv / dt.toDouble)
         }
-        agg.where(prevIn && col("last.prev_v").isNotNull)
-          .select(keys :+ v.as("value"): _*)
-
       // resets/changes (temporal/functions.go:37,41): consecutive
-      // pairs with BOTH ends in the window, via the same global lag
-      case "resets" | "changes" =>
-        val wSeries = Window.partitionBy(Vectors.labels.map(col): _*)
-          .orderBy(col("ts"), col("event_id"))
-        val withPrev = in
-          .withColumn("prev_v", lag("value", 1).over(wSeries))
-          .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(wSeries))
-        val prevIn = col("prev_us") > (col("bucket_s") - rangeS) * 1000000L
-        val pred = fn match {
-          case "resets"  => col("prev_v") > col("value")
-          case "changes" => col("prev_v") =!= col("value")
+      // pairs with both ends in the window
+      case "resets" | "changes" => (_, v, a, b, _) => {
+        var n = 0; var i = a + 1
+        while (i < b) {
+          if (if (fn == "resets") v(i - 1) > v(i) else v(i - 1) != v(i)) n += 1
+          i += 1
         }
-        gridExpand(withPrev, rangeS, rc)
-          .groupBy(keys: _*)
-          .agg(sum(when(prevIn && pred, 1).otherwise(0))
-            .cast("double").as("value"))
-
+        Some(n.toDouble)
+      }
       // deriv/predict_linear (temporal/linear_regression.go): least
       // squares over window-relative seconds; prediction at window
       // end + horizon — the batch linearRegression conventions
-      case "deriv" | "predict_linear" =>
-        val ex = gridExpand(in, rangeS, rc).withColumn("t",
-          (unix_timestamp(col("ts")) - (col("bucket_s") - rangeS))
-            .cast("double"))
-        val agg = ex.groupBy(keys: _*).agg(
-          covar_pop(col("t"), col("value")).as("cov_tv"),
-          var_pop(col("t")).as("var_t"),
-          avg(col("t")).as("avg_t"),
-          avg(col("value")).as("avg_v"))
-        val slope = when(col("var_t") > 0, col("cov_tv") / col("var_t"))
-        val v = fn match {
-          case "deriv" => round(slope, 9)
-          case "predict_linear" =>
-            round(col("avg_v") + slope *
-              (lit((rangeS + ps.head.toLong).toDouble) - col("avg_t")), 6)
+      case "deriv" | "predict_linear" => (us, v, a, b, tS) => {
+        val t = Array.tabulate(b - a)(j => (secondOf(us(a + j)) - (tS - rangeS)).toDouble)
+        val mt = mean(t, 0, t.length)
+        val mv = mean(v, a, b)
+        var cov = 0.0; var vt = 0.0; var j = 0
+        while (j < t.length) {
+          cov += (t(j) - mt) * (v(a + j) - mv); vt += (t(j) - mt) * (t(j) - mt); j += 1
         }
-        agg.select(keys :+ v.as("value"): _*).where(col("value").isNotNull)
-
-      // holt_winters (temporal/holt_winters.go): the batch fold over
-      // the in-window sample array, per grid instant
-      case "holt_winters" =>
-        val collected = gridExpand(in, rangeS, rc)
-          .groupBy(keys: _*)
-          .agg(array_sort(collect_list(
-            struct(col("ts"), col("event_id"), col("value")))).as("pts"))
-          .where(size(col("pts")) >= 2)
-        val vals = expr("transform(pts, p -> p.value)")
-        val smoothed = aggregate(
-          expr("slice(transform(pts, p -> p.value), 3, size(pts) - 2)"),
-          struct(
-            element_at(vals, 2).as("s"),
-            (element_at(vals, 2) - element_at(vals, 1)).as("b")),
-          (acc, v) => {
-            val s1 = lit(ps(0)) * v + (lit(1.0) - lit(ps(0))) * (acc("s") + acc("b"))
-            val b1 = lit(ps(1)) * (s1 - acc("s")) + (lit(1.0) - lit(ps(1))) * acc("b")
-            struct(s1.as("s"), b1.as("b"))
-          },
-          acc => acc("s"))
-        collected.select(keys :+ round(smoothed, 6).as("value"): _*)
-      case _ =>
-        val ex = gridExpand(in, rangeS, rc)
-        val v: Column = fn match {
-          case "sum_over_time"     => round(sum("value"), 6)
-          case "avg_over_time"     => round(avg("value"), 6)
-          case "min_over_time"     => min("value")
-          case "max_over_time"     => max("value")
-          case "count_over_time"   => count(lit(1)).cast("double")
-          case "last_over_time"    => max_by(col("value"), ordKey)
-          case "present_over_time" => max(lit(1.0))
-          case "stddev_over_time"  => round(stddev_pop("value"), 6)
-          case "stdvar_over_time"  => round(var_pop("value"), 6)
-          case "quantile_over_time" =>
-            round(percentile(col("value"), lit(ps.head)), 6)
-          case other => throw new ParseException(
-            s"$other is not supported in range-query mode")
+        if (vt > 0) {
+          val slope = cov / vt
+          Some(if (fn == "deriv") slope
+               else mv + slope * ((rangeS + ps.head.toLong).toDouble - mt))
+        } else None
+      }
+      // holt_winters (temporal/holt_winters.go): the batch fold
+      case "holt_winters" => (_, v, a, b, _) =>
+        if (b - a < 2) None
+        else {
+          val (sf, tf) = (ps(0), ps(1))
+          var s = v(a + 1); var tr = v(a + 1) - v(a); var i = a + 2
+          while (i < b) {
+            val s1 = sf * v(i) + (1.0 - sf) * (s + tr)
+            tr = tf * (s1 - s) + (1.0 - tf) * tr
+            s = s1; i += 1
+          }
+          Some(s)
         }
-        ex.groupBy(keys: _*).agg(v.as("value"))
+      case "sum_over_time" => (_, v, a, b, _) => Some(total(v, a, b))
+      case "avg_over_time" => (_, v, a, b, _) => Some(mean(v, a, b))
+      case "min_over_time" => (_, v, a, b, _) => Some(v.slice(a, b).min)
+      case "max_over_time" => (_, v, a, b, _) => Some(v.slice(a, b).max)
+      case "count_over_time" => (_, _, a, b, _) => Some((b - a).toDouble)
+      case "last_over_time" => (_, v, _, b, _) => Some(v(b - 1))
+      case "present_over_time" => (_, _, _, _, _) => Some(1.0)
+      case "stddev_over_time" => (_, v, a, b, _) => Some(math.sqrt(varPop(v, a, b)))
+      case "stdvar_over_time" => (_, v, a, b, _) => Some(varPop(v, a, b))
+      // percentile's exact form: linear interpolation between the
+      // order statistics around q·(n−1)
+      case "quantile_over_time" =>
+        val q = ps.head
+        if (!(q >= 0 && q <= 1))
+          throw new ParseException(s"quantile_over_time: q must be in [0, 1], got $q")
+        (_, v, a, b, _) => {
+          val x = v.slice(a, b).sorted
+          val pos = (x.length - 1) * q
+          val (lo, hi) = (pos.floor.toInt, pos.ceil.toInt)
+          Some(if (lo == hi || x(lo) == x(hi)) x(lo)
+               else (hi - pos) * x(lo) + (pos - lo) * x(hi))
+        }
+      // the instant vector's sample timestamp (timestamp())
+      case "timestamp" => (us, _, _, b, _) => Some(us(b - 1).toDouble / 1e6)
+      case other => throw new ParseException(
+        s"$other is not supported in range-query mode")
     }
   }
 
-  /** Two-phase grid-window evaluation for step-divisible ranges —
-    * the dense-data scale path (r12). The direct form expands EVERY
-    * SAMPLE to R/step instant rows: map-local and partial-aggregated,
-    * but its CPU is samples × R/step — at a dense dashboard request
-    * (rate(x[1d]) at a 30 s step ⇒ 2880×) that multiplier IS the cost
-    * at 100 TB. When R is a whole multiple of step, the window
-    * (T−R, T] is exactly R/step step-aligned CELLS
-    * (start+(c−1)·step, start+c·step]: phase 1 reduces samples to
-    * per-(series, cell) partials in one map-side-combining
-    * aggregation (sample cardinality in, cell cardinality out);
-    * phase 2 expands only the CELL rows by R/step and composes the
-    * partials — total work O(samples + cells·R/step), independent of
-    * per-cell density. The counter correction composes exactly:
-    * in-cell reset pairs pre-sum per cell (a non-first sample's
-    * predecessor is always its own cell's previous sample), and each
-    * cell's single BOUNDARY pair — its first sample against the
-    * previous cell's last — carries its predecessor's cell index so
-    * the assembly counts it only when that predecessor also lies
-    * inside the window. Results are identical to the direct path
-    * (same aggregates, same extrapolation; float sums associate
-    * differently, which distributed sums never guaranteed anyway —
-    * the engine's rounding conventions absorb it, parity spec in
-    * PromqlSpec). */
-  private[graft] def gridWindowCells(fn: String, in: DataFrame,
-                                     rangeS: Long, rc: RangeCtx): DataFrame = {
-    val m = rangeS / rc.stepS
-    val stepUs = rc.stepS * 1000000L
-    val startUs = rc.startS * 1000000L
-    val rel = unix_micros(col("ts")) - lit(startUs)
-    // within-cell ordering key (packed while step < 2³⁷ µs ≈ 38 h,
-    // struct beyond — the gridWindowDirect guard)
-    def cellOrd: Column =
-      if (stepUs < (1L << 37))
-        (pmod(rel - 1, lit(stepUs)) + 1) * lit(1L << 26) +
-          pmod(col("event_id"), lit(1L << 26))
-      else struct(unix_micros(col("ts")), col("event_id"))
-    val needRate = Set("rate", "increase", "delta")(fn)
-    val withCell0 =
-      if (!needRate) in
-      else {
-        val wSeries = Window.partitionBy(Vectors.labels.map(col): _*)
-          .orderBy(col("ts"), col("event_id"))
-        in.withColumn("prev_v", lag("value", 1).over(wSeries))
-          .withColumn("_prev_c", ceilDivUs(
-            lag(unix_micros(col("ts")), 1).over(wSeries) - startUs, stepUs))
-      }
-    val withCell = withCell0.withColumn("_c", ceilDivUs(rel, stepUs))
-    // phase 1: per-(series, cell) partials — ONLY the columns this
-    // function's phase 2 composes (a sparse corpus degenerates to
-    // cells ≈ samples, so carrying unused partials would make the
-    // expansion rows wider than the direct path's)
-    val cellKeys = (Vectors.labels :+ "_c").map(col)
-    val cellAggs: Seq[Column] =
-      if (needRate) Seq(
-        min_by(col("value"), cellOrd).as("first_v"),
-        max_by(col("value"), cellOrd).as("last_v"),
-        min(unix_micros(col("ts"))).as("first_us"),
-        max(unix_micros(col("ts"))).as("last_us"),
-        count(lit(1)).as("n"),
-        // rate.go:183 — in-cell reset pairs pre-sum; the boundary
-        // pair (the cell's FIRST sample vs the previous cell's last)
-        // rides along with its predecessor's cell index
-        sum(when(col("_prev_c") === col("_c") &&
-          col("prev_v") > col("value"), col("prev_v")).otherwise(lit(0.0)))
-          .as("corr_in"),
-        min_by(col("_prev_c"), cellOrd).as("bd_prev_c"),
-        min_by(when(col("prev_v") > col("value"), col("prev_v"))
-          .otherwise(lit(0.0)), cellOrd).as("bd_term"))
+  /** The rounding each function's value is reported at. */
+  private def rounded(fn: String, v: Column): Column = fn match {
+    case "rate" | "irate" | "deriv" => round(v, 9)
+    case "increase" | "delta" | "idelta" | "predict_linear" | "holt_winters" |
+         "sum_over_time" | "avg_over_time" | "stddev_over_time" |
+         "stdvar_over_time" | "quantile_over_time" => round(v, 6)
+    case _ => v
+  }
+
+  /** Sweep one series' samples (unsorted (µs, event_id, value)
+    * structs) across the grid: two pointers bound each instant's
+    * window (T−R, T], and a run of empty windows is skipped in one
+    * step to the first instant that reaches the next sample. Emits
+    * (T, value) for the instants `f` yields a value at.
+    *
+    * A null value (a subquery step that evaluated to nothing) counts
+    * as a sample for count/present/timestamp and is the value of
+    * last_over_time when it is the latest; every other function skips
+    * it, as the SQL aggregate it mirrors does, and is null over a
+    * window of nulls. */
+  private def sweep(pts: Seq[Row], fn: String, rangeS: Long, rc: RangeCtx,
+                    f: WindowFn): Seq[(Long, Option[Double])] = {
+    val sorted = pts.sortBy(r => (r.getLong(0), r.getLong(1)))
+    val us = sorted.map(_.getLong(0)).toArray
+    val isNull = sorted.map(_.isNullAt(2)).toArray
+    val v = sorted.map(r => if (r.isNullAt(2)) 0.0 else r.getDouble(2)).toArray
+    // nullsTo(i): the null values among the first i samples
+    val nullsTo = isNull.scanLeft(0)((c, x) => if (x) c + 1 else c)
+    def valueOf(a: Int, b: Int, tS: Long): Option[Option[Double]] =
+      if (nullsTo(b) == nullsTo(a)) f(us, v, a, b, tS).map(Some(_))
       else fn match {
-        case "sum_over_time"     => Seq(sum("value").as("sum_v"))
-        case "avg_over_time"     => Seq(sum("value").as("sum_v"),
-          count(lit(1)).as("n"))
-        case "min_over_time"     => Seq(min("value").as("min_v"))
-        case "max_over_time"     => Seq(max("value").as("max_v"))
-        case "count_over_time"   => Seq(count(lit(1)).as("n"))
-        case "last_over_time"    => Seq(max_by(col("value"), cellOrd).as("last_v"))
-        case "present_over_time" => Seq(max(lit(1.0)).as("p"))
-        case other => throw new ParseException(
-          s"$other has no cell-composable form")
+        case "count_over_time" | "present_over_time" | "timestamp" =>
+          f(us, v, a, b, tS).map(Some(_))
+        case "last_over_time" if isNull(b - 1) => Some(None)
+        case _ =>
+          val keep = (a until b).filterNot(isNull).toArray
+          if (keep.isEmpty) Some(None)
+          else f(keep.map(us), keep.map(v), 0, keep.length, tS).map(Some(_))
       }
-    val cells0 = withCell.groupBy(cellKeys: _*)
-      .agg(cellAggs.head, cellAggs.tail: _*)
-    // the cell frame is tiny in BYTES (that's the whole point), so
-    // AQE coalesces the phase-1 exchange to one or two partitions —
-    // and the ×(R/step) expansion below would then run on one core
-    // (measured 6× on the A/B probe). An explicit round-robin
-    // repartition with a fixed width survives both the redundant-
-    // exchange elimination (hash-partitioned output would subsume a
-    // same-key repartition) and AQE coalescing (user-specified
-    // partition counts are left alone), so the expansion stays as
-    // parallel as the session's shuffle width; the re-exchange moves
-    // only cell-cardinality rows.
-    val shufflePartitions =
-      in.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val cells = cells0.repartition(shufflePartitions)
-    // phase 2: expand cells to the windows they belong to
-    val kLo = greatest(lit(0L), col("_c"))
-    val kHi = least(lit(rc.nMax), col("_c") + (m - 1))
-    val ex = cells.where(kLo <= kHi)
-      .select(col("*"), explode(sequence(kLo, kHi)).as("_k"))
-      .withColumn("bucket_s", lit(rc.startS) + col("_k") * rc.stepS)
-    val keys = (Vectors.labels :+ "bucket_s").map(col)
-    if (needRate) {
-      val agg = ex.groupBy(keys: _*).agg(
-        min_by(col("first_v"), col("_c")).as("first_v"),
-        max_by(col("last_v"), col("_c")).as("last_v"),
-        min(col("first_us")).as("first_us"),
-        max(col("last_us")).as("last_us"),
-        sum(col("n")).as("n_samples"),
-        sum(col("corr_in") +
-          when(col("bd_prev_c").isNotNull &&
-            col("bd_prev_c") > col("_k") - m,
-            coalesce(col("bd_term"), lit(0.0))).otherwise(lit(0.0)))
-          .as("corr"))
-      val (d, i, r) = Temporal.extrapolatedRate(
-        col("bucket_s") - rangeS, col("bucket_s"), rangeS)
-      val v = fn match {
-        case "rate"     => round(r, 9)
-        case "increase" => round(i, 6)
-        case "delta"    => round(d, 6)
-      }
-      agg.select(keys :+ v.as("value"): _*).where(col("value").isNotNull)
-    } else {
-      val v: Column = fn match {
-        case "sum_over_time"     => round(sum("sum_v"), 6)
-        case "avg_over_time"     => round(sum("sum_v") / sum("n"), 6)
-        case "min_over_time"     => min("min_v")
-        case "max_over_time"     => max("max_v")
-        case "count_over_time"   => sum("n").cast("double")
-        case "last_over_time"    => max_by(col("last_v"), col("_c"))
-        case "present_over_time" => max(lit(1.0))
-        case other => throw new ParseException(
-          s"$other has no cell-composable form")
-      }
-      ex.groupBy(keys: _*).agg(v.as("value"))
+    val n = us.length
+    val (startUs, stepUs, rUs) =
+      (rc.startS * 1000000L, rc.stepS * 1000000L, rangeS * 1000000L)
+    val out = Seq.newBuilder[(Long, Option[Double])]
+    var (lo, hi, k) = (0, 0, 0L)
+    while (k <= rc.nMax && lo < n) {
+      val tUs = startUs + k * stepUs
+      while (hi < n && us(hi) <= tUs) hi += 1
+      while (lo < hi && us(lo) <= tUs - rUs) lo += 1
+      if (lo < hi) {
+        val tS = rc.startS + k * rc.stepS
+        valueOf(lo, hi, tS).foreach(x => out += ((tS, x)))
+        k += 1
+      } else if (hi < n) {
+        // the first T ≥ the next sample's ts (> tUs, so k strictly grows)
+        k = (us(hi) - startUs + stepUs - 1) / stepUs
+      } else lo = n
     }
+    out.result()
+  }
+
+  /** One function over the grid windows, per series — the range
+    * door's window evaluator: every temporal leaf, the bare
+    * selector's staleness-window instant vector, timestamp(),
+    * histogram_quantile()'s instant vector and the subquery's outer
+    * window. The samples that can reach a window, ts ∈ (start−R,
+    * end], group per series; each group is sorted by (ts, event_id)
+    * and swept once across the grid ([[sweep]]). Output (labels…,
+    * bucket_s, value); instants whose window holds no samples are
+    * absent (PromQL's empty vector).
+    *
+    * Scale: work is O(samples + emitted instants), plus the window
+    * sizes for the summed terms (sums, means, reset corrections,
+    * regression moments), which are plain per-window loops — a
+    * sliding add/subtract would drift past the 9-decimal rounding the
+    * results are compared at. Memory holds one series' samples within
+    * the query range. The per-series grouping is a plain aggregate on
+    * the label columns, so a store bucketed on them (SeriesStore)
+    * feeds it with no exchange. */
+  private def gridWindowEval(fn: String, in: DataFrame, rangeS: Long,
+                             rc: RangeCtx, ps: Seq[Double],
+                             labels: Seq[String] = Vectors.labels): DataFrame = {
+    val f = windowFn(fn, rangeS, ps)
+    val kernel = udf((pts: Seq[Row]) => sweep(pts, fn, rangeS, rc, f))
+    val us = unix_micros(col("ts"))
+    val eventId =
+      if (in.columns.contains("event_id")) col("event_id") else lit(0L)
+    val keys = labels.map(col)
+    in.where(us > (rc.startS - rangeS) * 1000000L && us <= rc.endS * 1000000L)
+      .groupBy(keys: _*)
+      .agg(collect_list(struct(us, eventId, col("value").cast("double")))
+        .as("_pts"))
+      .select(keys :+ inline(kernel(col("_pts"))): _*)
+      .select(keys :+ col("_1").as("bucket_s") :+
+        rounded(fn, col("_2")).as("value"): _*)
   }
 
   private def labelsOf(df: DataFrame): Seq[String] =
@@ -1174,8 +1038,8 @@ object PromQL {
           "absent_over_time requires a range selector in range-query mode"))
       rangeAtPin(sel, rc.get, samples) { (in, c) =>
         rangeGrid(c, samples)
-          .join(gridExpand(in, r, c).select("bucket_s").distinct(),
-            Seq("bucket_s"), "left_anti")
+          .join(gridWindowEval("present_over_time", in, r, c, Nil)
+            .select("bucket_s").distinct(), Seq("bucket_s"), "left_anti")
           .select(col("bucket_s"), lit(1.0).as("value"))
       }
     case Func(fn, sel: Selector, ps, _) if rc.isDefined && temporalFns(fn) =>
@@ -1193,10 +1057,7 @@ object PromQL {
     // (upstream unconsolidated/timestamp.go:38 over the range grid).
     case Func("timestamp", sel: Selector, _, _) if rc.isDefined =>
       rangeAtPin(sel, rc.get, samples) { (in, c) =>
-        val keys = (Vectors.labels :+ "bucket_s").map(col)
-        gridExpand(in, c.lookbackS, c).groupBy(keys: _*)
-          .agg((max(unix_micros(col("ts"))).cast("double") / 1e6)
-            .as("value"))
+        gridWindowEval("timestamp", in, c.lookbackS, c, Nil)
       }
     // histogram_quantile(q, sel): the instant vector at each grid T
     // (last sample per series in the staleness window), then the same
@@ -1220,16 +1081,13 @@ object PromQL {
     // are absolute multiples of the subquery step, independent of the
     // outer grid origin — so the stepped frame is the SAME batch
     // evaluation as the instant-query subquery path below. Only the
-    // OUTER windowing is grid-keyed: each step value (a "sample" at
-    // its step instant) expands to the outer grid instants T whose
-    // right-closed (T−lb, T] window contains it, via the same
-    // integer-µs gridExpand as every range-mode leaf, then ONE
-    // map-side-combining aggregation per (labels, T).
+    // OUTER windowing is grid-keyed: each step value is a sample at
+    // its step instant, swept per label set like every range-mode
+    // leaf.
     case Func(fn, Subquery(body, lb, st, off, at), ps, _) if rc.isDefined =>
       val c0 = rc.get
       def evalGrid(c: RangeCtx): DataFrame = {
         val stepped = subquerySteps(body, st, samples)
-        val stepLabels = labelsOf(stepped)
         // the subquery's own `offset` shifts the whole evaluation
         // window into the past: instant T reads steps in
         // (T−off−lb, T−off] ⇔ each step value serves the windows of
@@ -1237,24 +1095,7 @@ object PromQL {
         val withTs = stepped
           .withColumn("ts", timestamp_seconds(col("bucket_s") + off))
           .drop("bucket_s")
-        val keys = (stepLabels :+ "bucket_s").map(col)
-        val v: Column = fn match {
-          case "sum_over_time"     => round(sum("value"), 6)
-          case "avg_over_time"     => round(avg("value"), 6)
-          case "min_over_time"     => min("value")
-          case "max_over_time"     => max("value")
-          case "count_over_time"   => count(lit(1)).cast("double")
-          case "stddev_over_time"  => round(stddev_pop("value"), 6)
-          case "stdvar_over_time"  => round(var_pop("value"), 6)
-          case "quantile_over_time" =>
-            round(percentile(col("value"), lit(ps.head)), 6)
-          // steps are strictly ordered by their instant — no tiebreak
-          case "last_over_time"    => max_by(col("value"), unix_micros(col("ts")))
-          case "present_over_time" => max(lit(1.0))
-          case other =>
-            throw new ParseException(s"$other does not accept a subquery")
-        }
-        gridExpand(withTs, lb, c).groupBy(keys: _*).agg(v.as("value"))
+        gridWindowEval(fn, withTs, lb, c, ps, labelsOf(stepped))
       }
       // the subquery's own `@` pins the evaluation timestamp — one
       // single-instant evaluation, replicated across the grid

@@ -106,38 +106,52 @@ object Temporal {
       .agg(round(percentile(col("value"), lit(q)), 6).as("quantile_v"))
 
   /** The Prometheus extrapolated rate family — exact replay of
-    * standardRateFunc (temporal/rate.go:150) from the per-window
+    * standardRateFunc (temporal/rate.go:150) from one window's
     * aggregates (first/last value, first/last sample micros, sample
-    * count, counter correction = Σ prev at each reset):
+    * count, counter correction = Σ prev at each reset) over the
+    * window [rangeStartS, rangeEndS] of `winSecs` seconds:
     * the observed delta extrapolates toward the window boundaries
     * when the first/last samples sit within 1.1 average sample
     * spacings of them (half a spacing otherwise), the counter form
     * additionally clamps the start extrapolation at the counter's
     * projected zero point, and windows with fewer than two samples
-    * (or a zero sampled interval) yield null — rate.go's NaN.
-    * Returns (delta, increase, rate) columns. */
-  private[graft] def extrapolatedRate(rangeStart: Column, rangeEnd: Column,
-                                      winSecs: Long): (Column, Column, Column) = {
-    val firstS = col("first_us").cast("double") / 1e6
-    val lastS = col("last_us").cast("double") / 1e6
+    * (or a zero sampled interval) yield None — rate.go's NaN.
+    * Returns (delta, increase, rate). The one definition behind the
+    * batch frames ([[rateFrame]], [[rateSliding]], via
+    * [[extrapolatedRateCol]]) and the range door's sweep. */
+  private[graft] def extrapolatedRate(firstV: Double, lastV: Double,
+                                      firstUs: Long, lastUs: Long, n: Long,
+                                      corr: Double, rangeStartS: Long,
+                                      rangeEndS: Long, winSecs: Long)
+      : Option[(Double, Double, Double)] = {
     // (last−first)/1e6, NOT last/1e6 − first/1e6: the oracle computes
     // the difference first and the two orders differ in the last ulp
-    val si = (col("last_us") - col("first_us")).cast("double") / 1e6
-    val avgDur = si / (col("n_samples") - 1).cast("double")
+    val si = (lastUs - firstUs).toDouble / 1e6
+    if (n < 2 || !(si > 0)) return None
+    val avgDur = si / (n - 1).toDouble
     val thr = avgDur * 1.1
-    val res = col("last_v") - col("first_v") + col("corr")
-    val d0 = firstS - rangeStart.cast("double")
-    val dEnd = rangeEnd.cast("double") - lastS
-    val dz = when(res > 0 && col("first_v") >= 0,
-      least(d0, si * col("first_v") / res)).otherwise(d0)
-    def ext(ds: Column) = si +
-      when(ds < thr, ds).otherwise(avgDur / 2) +
-      when(dEnd < thr, dEnd).otherwise(avgDur / 2)
-    val ok = col("n_samples") >= 2 && si > 0
-    (when(ok, (col("last_v") - col("first_v")) * ext(d0) / si),
-     when(ok, res * ext(dz) / si),
-     when(ok, res * ext(dz) / si / winSecs))
+    val res = lastV - firstV + corr
+    val d0 = firstUs.toDouble / 1e6 - rangeStartS.toDouble
+    val dEnd = rangeEndS.toDouble - lastUs.toDouble / 1e6
+    val toZero = si * firstV / res
+    val dz = if (res > 0 && firstV >= 0 && toZero < d0) toZero else d0
+    def ext(ds: Double) = si +
+      (if (ds < thr) ds else avgDur / 2) +
+      (if (dEnd < thr) dEnd else avgDur / 2)
+    Some(((lastV - firstV) * ext(d0) / si, res * ext(dz) / si,
+      res * ext(dz) / si / winSecs))
   }
+
+  private val extrapolatedRateUdf = udf(extrapolatedRate _)
+
+  /** [[extrapolatedRate]] over the per-window aggregate columns
+    * (first_v, last_v, first_us, last_us, n_samples, corr): a struct
+    * of (_1 delta, _2 increase, _3 rate), null where it yields None. */
+  private def extrapolatedRateCol(rangeStart: Column, rangeEnd: Column,
+                                  winSecs: Long): Column =
+    extrapolatedRateUdf(col("first_v"), col("last_v"), col("first_us"),
+      col("last_us"), col("n_samples"), col("corr"), rangeStart, rangeEnd,
+      lit(winSecs))
 
   /** rate / increase / delta in one frame (temporal/rate.go) —
     * Prometheus extrapolation semantics, see [[extrapolatedRate]]. */
@@ -161,13 +175,12 @@ object Temporal {
         // rate.go:183 — a reset contributes the whole previous value
         sum(when(col("prev_v") > col("value"), col("prev_v"))
           .otherwise(lit(0.0))).as("corr"))
-    val (d, i, r) =
-      extrapolatedRate(col("bucket_s"), col("bucket_s") + winSecs, winSecs)
-    agg.select(
-      (labelCols :+ "bucket_s").map(col) ++ Seq(
-        round(d, 6).as("delta_v"),
-        round(i, 6).as("increase_v"),
-        round(r, 9).as("rate_v")): _*)
+    agg.withColumn("_r",
+        extrapolatedRateCol(col("bucket_s"), col("bucket_s") + winSecs, winSecs))
+      .select((labelCols :+ "bucket_s").map(col) ++ Seq(
+        round(col("_r._1"), 6).as("delta_v"),
+        round(col("_r._2"), 6).as("increase_v"),
+        round(col("_r._3"), 9).as("rate_v")): _*)
   }
 
   /** irate / idelta (temporal/rate.go:36,40): instantaneous rate from
@@ -390,13 +403,12 @@ object Temporal {
         max(unix_micros(col("ts"))).as("last_us"),
         count(lit(1)).as("n_samples"),
         sum(col("reset_in_w")).as("corr"))
-    val (d, i, r) = extrapolatedRate(
-      col("bucket_s") - lookbackS, col("bucket_s"), lookbackS)
-    agg.select(
-      (labelCols :+ "bucket_s").map(col) ++ Seq(
-        round(d, 6).as("delta_v"),
-        round(i, 6).as("increase_v"),
-        round(r, 9).as("rate_v")): _*)
+    agg.withColumn("_r",
+        extrapolatedRateCol(col("bucket_s") - lookbackS, col("bucket_s"), lookbackS))
+      .select((labelCols :+ "bucket_s").map(col) ++ Seq(
+        round(col("_r._1"), 6).as("delta_v"),
+        round(col("_r._2"), 6).as("increase_v"),
+        round(col("_r._3"), 9).as("rate_v")): _*)
   }
 
   /** timestamp() (unconsolidated/timestamp.go:38): value := sample

@@ -662,14 +662,44 @@ class PlanSpec extends SparkSpec {
   test("pql_range expands windows by index arithmetic — no grid join") {
     for (q <- Seq("pql_range", "pql_range_instant")) {
       val p = plan(q)
-      // each sample computes its own instant-index range and
-      // explodes — the instant grid must never join against samples
+      // each series sweeps its own window pointers across the grid
+      // and emits through one generator — the instant grid must
+      // never join against samples
       assert(!p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"),
         s"$q: grid×samples join shape:\n" + p.take(2000))
-      assert(p.contains("Generate explode"),
-        s"$q: expected the index-range explode:\n" + p.take(2000))
+      assert(p.contains("Generate inline"),
+        s"$q: expected the sweep's generator:\n" + p.take(2000))
     }
+  }
+
+  test("range sweep over the bucketed store: no exchange below the kernel") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object H extends AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("store_pql_range")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    // the per-series grouping reads its distribution from the
+    // (name, user_id) buckets: nothing shuffles between the scan and
+    // the sweep's aggregate
+    val kernels = H.collect(plan) {
+      case a: ObjectHashAggregateExec if a.aggregateExpressions
+        .exists(_.aggregateFunction.isInstanceOf[CollectList]) => a
+    }
+    assert(kernels.nonEmpty, plan.toString.take(2000))
+    for (k <- kernels)
+      assert(H.collect(k) { case e: ShuffleExchangeExec => e }.isEmpty,
+        "exchange below the sweep:\n" + k.toString.take(2000))
+    // the only hash exchange is the `sum by (name)` one
+    val hashed = H.collect(plan) {
+      case e: ShuffleExchangeExec
+        if e.outputPartitioning.toString.startsWith("hashpartitioning") => e
+    }
+    assert(hashed.size == 1 && !hashed.head.outputPartitioning.toString
+      .contains("user_id"), hashed.map(_.outputPartitioning).mkString("\n"))
   }
 
   test("metadata limits cap via TakeOrdered, not a global sort") {
@@ -1152,15 +1182,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("range-mode subquery: one scan, Generate expansion, no grid join") {
-    // the outer window is an integer-µs index expansion (Generate of
-    // an explode(sequence(...))), NOT a join against a grid relation,
-    // and every aggregation stays a map-side-combining HashAggregate
-    // (the packed ordKey keeps min_by/max_by off SortAggregate)
+    // the outer window is the per-series sweep (its output is a
+    // Generate of the kernel's rows), NOT a join against a grid
+    // relation, and every aggregation stays map-side-combining
     val p = plan("pql_range_subquery")
     assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin") &&
       !p.contains("BroadcastNestedLoopJoin"), p.take(2000))
-    assert(p.contains("Generate explode(sequence"),
-      "grid windows must expand map-locally:\n" + p.take(2000))
+    assert(p.contains("Generate inline"),
+      "grid windows must be swept map-locally:\n" + p.take(2000))
     assert(!p.contains("SortAggregate"),
       "window reductions must hash-aggregate:\n" + p.take(2000))
     val scans = "Scan parquet".r.findAllIn(p).length
@@ -1171,8 +1200,8 @@ class PlanSpec extends SparkSpec {
     Seq("pql_range_irate", "pql_range_deriv", "pql_range_resets").foreach { q =>
       val p = plan(q)
       assert(!p.contains("CartesianProduct") &&
-        p.contains("Generate explode(sequence"),
-        s"$q lost the index-expansion shape:\n" + p.take(2000))
+        p.contains("Generate inline"),
+        s"$q lost the sweep shape:\n" + p.take(2000))
     }
   }
 }

@@ -601,55 +601,195 @@ class PromqlSpec extends SparkSpec {
     assert(bAt == Seq(1705000000L - 1705000000L % 21600L), bAt.toString)
   }
 
-  test("two-phase cell windows equal the direct per-sample expansion") {
-    import org.apache.spark.sql.functions.col
-    import graft.promql.PromQL.{RangeCtx, gridWindowCells, gridWindowDirect}
-    val in = Fetch(tsdb.Vectors.samples(Tables.events(spark, sf)),
-      Seq(Fetch.Matcher("name", Fetch.Eq, "purchase")))
-    // [1d] at a 1h step: 24 cells per window — the dense shape the
-    // dispatcher routes to the cell path
-    val rc = RangeCtx(1704240000L, 1706313600L, 3600L, 300L)
-    val fns = Seq("rate", "increase", "delta", "sum_over_time",
-      "avg_over_time", "min_over_time", "max_over_time",
-      "count_over_time", "last_over_time", "present_over_time")
-    for (fn <- fns) {
-      def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getAs[String]("name"), r.getAs[Long]("user_id"),
-          r.getAs[Long]("bucket_s")) -> r.getAs[Double]("value")).toMap
-      val direct = toMap(gridWindowDirect(fn, in, 86400L, rc, Nil))
-      val cells = toMap(gridWindowCells(fn, in, 86400L, rc))
-      assert(direct.keySet == cells.keySet,
-        s"$fn instant sets differ: ${direct.keySet.diff(cells.keySet).take(3)}" +
-          s" / ${cells.keySet.diff(direct.keySet).take(3)}")
-      assert(direct.nonEmpty, s"$fn produced nothing")
-      for ((k, v) <- direct) {
-        val c = cells(k)
-        // min/max/last/count/present pick identical values; the
-        // summing forms may differ by association order inside their
-        // rounding guard
-        assert(math.abs(v - c) <= 1e-6, s"$fn $k: direct $v vs cells $c")
-      }
-    }
-    // boundary-pair correctness on a crafted counter: resets straddle
-    // cell boundaries, and the pair vanishes exactly when the
-    // predecessor's cell leaves the window
+  test("range sweep equals a brute-force per-instant reference") {
     val s0 = spark
     import s0.implicits._
-    val cross = Seq(
-      ("m", 1L, 3599L, 10.0, 1L),  // cell 1 (window boundary - 1s)
-      ("m", 1L, 3601L, 4.0, 2L),   // cell 2: boundary reset pair 10→4
-      ("m", 1L, 7300L, 6.0, 3L),   // cell 3: in..no, boundary 4→6 no reset
-      ("m", 1L, 7400L, 5.0, 4L)    // cell 3: in-cell reset 6→5
-    ).toDF("name", "user_id", "tss", "value", "event_id")
-      .select(col("name"), col("user_id"),
-        org.apache.spark.sql.functions.timestamp_seconds(col("tss")).as("ts"),
-        col("value"), col("event_id"))
-    val rc2 = RangeCtx(28800L, 36000L, 3600L, 300L)
-    val d2 = gridWindowDirect("increase", cross, 28800L, rc2, Nil).collect()
-      .map(r => r.getAs[Long]("bucket_s") -> r.getAs[Double]("value")).toMap
-    val c2 = gridWindowCells("increase", cross, 28800L, rc2).collect()
-      .map(r => r.getAs[Long]("bucket_s") -> r.getAs[Double]("value")).toMap
-    assert(d2 == c2 && d2.nonEmpty, s"direct $d2 vs cells $c2")
+    import org.apache.spark.sql.functions.{col, timestamp_micros}
+    // (user_id, µs, value, event_id) — crafted series:
+    //  1: equal timestamps, resolved by event_id
+    //  2: a counter whose reset pair (10 → 4) straddles the lower
+    //     window edge of some instants
+    //  3: one sample per hour-window (single-sample windows) and
+    //     hour-long gaps (empty windows)
+    //  4: samples before start − R, and one exactly on it
+    //  5: a seeded random counter with resets, sub-second offsets and
+    //     ts ties
+    val s = 1000000L
+    val rnd = new scala.util.Random(7)
+    var c5 = 0.0
+    val series5 = (0 until 80).map { i =>
+      c5 = if (rnd.nextInt(9) == 0) rnd.nextInt(5).toDouble
+           else c5 + rnd.nextInt(40)
+      (5L, (rnd.nextInt(200000).toLong * s) / 10 + (if (i % 7 == 0) 0L else rnd.nextInt(999999)),
+        c5, 500L + i)
+    } ++ Seq((5L, 7000L * s, 3.0, 600L), (5L, 7000L * s, 1.0, 599L))
+    val raw: Seq[(Long, Long, Double, Long)] = Seq(
+      (1L, 5000L * s, 5.0, 11L), (1L, 5000L * s, 2.0, 10L),
+      (1L, 6500L * s, 7.0, 12L), (1L, 6500L * s, 1.0, 13L),
+      (1L, 9000L * s, 4.0, 14L), (1L, 11000L * s, 4.0, 15L),
+      (2L, 3599L * s, 10.0, 20L), (2L, 3601L * s, 4.0, 21L),
+      (2L, 7300L * s, 6.0, 22L), (2L, 7400L * s, 5.0, 23L),
+      (2L, 10100L * s, 8.0, 24L),
+      (3L, 500L * s, 1.0, 30L), (3L, 9000L * s, 2.0, 31L),
+      (3L, 16000L * s, 3.0, 32L),
+      (4L, 50L * s, 9.5, 39L), (4L, 100L * s, 9.0, 40L),
+      (4L, 3600L * s, 8.0, 41L),
+      (4L, 7000L * s + 1, 7.0, 42L)) ++ series5
+    val samples = rnd.shuffle(raw)
+      .toDF("user_id", "us", "value", "event_id")
+      .select(org.apache.spark.sql.functions.lit("m").as("name"),
+        col("user_id"), timestamp_micros(col("us")).as("ts"), col("value"),
+        col("event_id"))
+
+    def secondOf(us: Long) = Math.floorDiv(us, s)
+    // Prometheus extrapolatedRate (promql/functions.go), written out
+    // as upstream does it
+    def extrapolated(w: Seq[(Long, Double)], lo: Long, hi: Long,
+                     counter: Boolean, isRate: Boolean): Option[Double] = {
+      if (w.size < 2) return None
+      val (first, last) = (w.head, w.last)
+      val sampled = (last._1 - first._1) / 1e6
+      if (sampled <= 0) return None
+      var result = last._2 - first._2
+      if (counter) w.sliding(2).foreach { case Seq(a, b) =>
+        if (b._2 < a._2) result += a._2 }
+      val avgGap = sampled / (w.size - 1)
+      var toStart = first._1 / 1e6 - lo
+      val toEnd = hi - last._1 / 1e6
+      if (counter && result > 0 && first._2 >= 0)
+        toStart = math.min(toStart, sampled * (first._2 / result))
+      val thr = avgGap * 1.1
+      val interval = sampled +
+        (if (toStart < thr) toStart else avgGap / 2) +
+        (if (toEnd < thr) toEnd else avgGap / 2)
+      result *= interval / sampled
+      Some(if (isRate) result / (hi - lo) else result)
+    }
+    // the function's definition over one window, sorted by
+    // (ts, event_id): (µs, value) pairs of (T − R, T]
+    def define(fn: String, ps: Seq[Double], w: Seq[(Long, Double)],
+               tS: Long, rangeS: Long): Option[Double] = {
+      val vs = w.map(_._2)
+      def pairs = w.sliding(2).collect { case Seq(a, b) => (a._2, b._2) }.toSeq
+      def varPop = { val m = vs.sum / vs.size; vs.map(x => (x - m) * (x - m)).sum / vs.size }
+      fn match {
+        case "rate"     => extrapolated(w, tS - rangeS, tS, counter = true, isRate = true)
+        case "increase" => extrapolated(w, tS - rangeS, tS, counter = true, isRate = false)
+        case "delta"    => extrapolated(w, tS - rangeS, tS, counter = false, isRate = false)
+        case "irate" | "idelta" if w.size >= 2 =>
+          val (a, b) = (w(w.size - 2), w.last)
+          val dt = secondOf(b._1) - secondOf(a._1)
+          if (fn == "idelta") Some(b._2 - a._2)
+          else if (dt == 0) None else Some((b._2 - a._2) / dt)
+        case "irate" | "idelta" => None
+        case "resets"  => Some(pairs.count { case (a, b) => b < a }.toDouble)
+        case "changes" => Some(pairs.count { case (a, b) => b != a }.toDouble)
+        case "deriv" | "predict_linear" =>
+          val ts = w.map(p => (secondOf(p._1) - (tS - rangeS)).toDouble)
+          val (mt, mv) = (ts.sum / ts.size, vs.sum / vs.size)
+          val sxx = ts.map(t => (t - mt) * (t - mt)).sum
+          val sxy = ts.zip(vs).map { case (t, v) => (t - mt) * (v - mv) }.sum
+          if (sxx == 0) None
+          else if (fn == "deriv") Some(sxy / sxx)
+          else Some(mv + sxy / sxx * (rangeS + ps.head - mt))
+        case "holt_winters" if w.size >= 2 =>
+          var (lvl, tr) = (vs(1), vs(1) - vs(0))
+          vs.drop(2).foreach { v =>
+            val l1 = ps(0) * v + (1 - ps(0)) * (lvl + tr)
+            tr = ps(1) * (l1 - lvl) + (1 - ps(1)) * tr
+            lvl = l1
+          }
+          Some(lvl)
+        case "holt_winters" => None
+        case "sum_over_time"   => Some(vs.sum)
+        case "avg_over_time"   => Some(vs.sum / vs.size)
+        case "min_over_time"   => Some(vs.min)
+        case "max_over_time"   => Some(vs.max)
+        case "count_over_time" => Some(vs.size.toDouble)
+        case "last_over_time"  => Some(vs.last)
+        case "present_over_time" => Some(1.0)
+        case "stddev_over_time" => Some(math.sqrt(varPop))
+        case "stdvar_over_time" => Some(varPop)
+        case "quantile_over_time" =>
+          val x = vs.sorted
+          val rank = ps.head * (x.size - 1)
+          val lo = rank.floor.toInt
+          val hi = math.min(lo + 1, x.size - 1)
+          Some(x(lo) * (1 - (rank - lo)) + x(hi) * (rank - lo))
+        case "timestamp" => Some(w.last._1 / 1e6)
+      }
+    }
+    val bySeries = raw.groupBy(_._1).map { case (u, rows) =>
+      u -> rows.sortBy(r => (r._2, r._4)).map(r => (r._2, r._3)) }
+    // every series' value at every grid instant; `pin` evaluates each
+    // instant's window at the pinned T instead, `offS` re-stamps the
+    // samples offS later
+    def reference(fn: String, ps: Seq[Double], rangeS: Long,
+                  grid: Seq[Long], pin: Option[Long] = None,
+                  offS: Long = 0L): Map[(Long, Long), Double] =
+      (for {
+        (u, pts) <- bySeries.toSeq
+        t <- grid
+        at = pin.getOrElse(t)
+        w = pts.map(p => (p._1 + offS * s, p._2))
+          .filter(p => p._1 > (at - rangeS) * s && p._1 <= at * s)
+        if w.nonEmpty
+        v <- define(fn, ps, w, at, rangeS)
+      } yield (u, t) -> v).toMap
+    def got(q: String, start: Long, end: Long, step: Long,
+            lookback: Long = 300L): Map[(Long, Long), Double] =
+      PromQL.rangeQuery(samples, q, start, end, step, lookback).collect()
+        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("bucket_s")) ->
+          r.getAs[Double]("value")).toMap
+    def check(q: String, want: Map[(Long, Long), Double],
+              start: Long, end: Long, step: Long, lookback: Long = 300L): Unit = {
+      val g = got(q, start, end, step, lookback)
+      assert(want.nonEmpty, s"$q: the reference is empty")
+      assert(g.keySet == want.keySet,
+        s"$q: instants only in the sweep ${(g.keySet -- want.keySet).take(4)}," +
+          s" only in the reference ${(want.keySet -- g.keySet).take(4)}")
+      for ((k, v) <- want)
+        assert(math.abs(g(k) - v) <= 1e-6 * math.max(1.0, math.abs(v)),
+          s"$q $k: sweep ${g(k)} vs reference $v")
+    }
+    val fns: Seq[(String, Seq[Double], String => String)] = Seq(
+      "rate", "increase", "delta", "irate", "idelta", "resets", "changes",
+      "deriv", "sum_over_time", "avg_over_time", "min_over_time",
+      "max_over_time", "count_over_time", "last_over_time",
+      "present_over_time", "stddev_over_time", "stdvar_over_time"
+    ).map(f => (f, Seq.empty[Double], (r: String) => s"$f($r)")) ++ Seq(
+      ("predict_linear", Seq(60.0), (r: String) => s"predict_linear($r, 60)"),
+      ("holt_winters", Seq(0.5, 0.3), (r: String) => s"holt_winters($r, 0.5, 0.3)"),
+      ("quantile_over_time", Seq(0.3), (r: String) => s"quantile_over_time(0.3, $r)"))
+    // an hour at a 100 s step (36 instants per window), and two days
+    // — a window past 2³⁷ µs ≈ 38 h, where a (µs offset · 2²⁶ +
+    // event_id) ordering key would overflow
+    for ((rangeS, dur, start, end, step) <- Seq(
+           (3600L, "1h", 3700L, 21000L, 100L),
+           (172800L, "2d", 7000L, 30000L, 1000L))) {
+      val grid = start to end by step
+      for ((fn, ps, q) <- fns)
+        check(q(s"m[$dur]"), reference(fn, ps, rangeS, grid), start, end, step)
+    }
+    val grid = 3700L to 21000L by 100L
+    // rate, irate and deriv need two samples: series 3's windows hold
+    // one, so it never appears
+    assert(!got("rate(m[1h])", 3700L, 21000L, 100L).keys.exists(_._1 == 3L))
+    // the modifiers: offset re-stamps the samples, @ pins the window
+    check("rate(m[1h] offset 10m)",
+      reference("rate", Nil, 3600L, grid, offS = 600L), 3700L, 21000L, 100L)
+    check("sum_over_time(m[1h] @ end())",
+      reference("sum_over_time", Nil, 3600L, grid, pin = Some(21000L)),
+      3700L, 21000L, 100L)
+    // the instant vector (last sample in the lookback) and timestamp()
+    check("m", reference("last_over_time", Nil, 600L, grid), 3700L, 21000L, 100L, 600L)
+    check("timestamp(m)", reference("timestamp", Nil, 600L, grid),
+      3700L, 21000L, 100L, 600L)
+    // absent_over_time: the instants where no series has a sample
+    val present = reference("present_over_time", Nil, 600L, grid).keySet.map(_._2)
+    val absent = PromQL.rangeQuery(samples, "absent_over_time(m[10m])",
+      3700L, 21000L, 100L).collect().map(_.getAs[Long]("bucket_s")).toSet
+    assert(absent.nonEmpty && absent == grid.toSet -- present)
   }
 
   test("gap windows: sliding evaluation with step > lookback") {
